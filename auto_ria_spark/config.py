@@ -2,15 +2,19 @@
 
 Mirrors the reference's env-driven settings (reference:
 app/config/settings.py:76-84) plus the engine-side knobs the north rule
-requires (politeness budgets, Bloom sizing, skew salting, retry policy).
-All time arithmetic is driven by a fixed ``wave_ts_base`` so test runs are
-bit-for-bit deterministic (the reference uses wall-clock ``datetime.now()``
-at app/scraper/autoria.py:139; we pass the timestamp in).
+requires (politeness budgets, seen-filter sizing, skew salting, retry
+policy, delta-log compaction, wave pipelining, fetch transport, payload
+format and scheduling order).  Robots gating is not a field: the engine
+gates exactly when a ``robots`` DataFrame is passed to it.  All time
+arithmetic is driven by a fixed ``wave_ts_base`` so test runs are
+bit-for-bit deterministic (the reference uses wall-clock
+``datetime.now()`` at app/scraper/autoria.py:139; we pass the timestamp
+in).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -63,34 +67,8 @@ class CrawlConfig:
     # rows salted across `ceil(count / salt_target)` sub-partitions before
     # the fetch stage (C6).
     salt_target: int = 1024
-    # Arrow batch bound for multi-MB image payload columns (SURVEY §4).
-    arrow_max_records: int = 128
     # shuffle partitioning for crawl-state joins (bucket-by url_hash).
     shuffle_partitions: int = 32
-
-    # robots gating on by default (engine addition per north_rule, C5)
-    respect_robots: bool = True
-
-    # intra-wave shared-stage sharing primitive: "checkpoint" cuts lineage
-    # per stage with a lazy localCheckpoint stub (shallow trees — cheap
-    # downstream analysis/plan-cache lookups); "persist" registers a SQL
-    # cache instead (no driver-side toRdd per stage, but downstream trees
-    # deepen and CacheManager sameResult scans grow — measured slower at
-    # bench scale; kept as an A/B knob).
-    stage_share_mode: str = "checkpoint"
-
-    # adaptive query execution INSIDE the wave loop.  With AQE on, the
-    # lazy per-stage checkpoint stubs are not actually lazy: toRdd on an
-    # AdaptiveSparkPlanExec materializes every shuffle/broadcast stage
-    # SYNCHRONOUSLY on the driver's plan-construction path (measured
-    # 0.3-0.8 s per stub — the bulk of the per-wave driver wall).  Off,
-    # toRdd only plans+compiles and the execution overlaps in the warm
-    # threads.  BUT off, every tiny in-wave shuffle runs at the full
-    # cfg.shuffle_partitions task count (no runtime coalescing) —
-    # measured strictly worse at bench scale (stats job 2.4 s → 26 s).
-    # Kept as a knob for mega-wave regimes where per-task data is large
-    # enough that coalescing never fires anyway; default ON.
-    aqe_in_wave: bool = True
 
     # wave pipelining (run() only): pass state between waves as in-memory
     # checkpoint stubs and commit tables asynchronously.  Wins when waves
@@ -133,8 +111,6 @@ class CrawlConfig:
     # policy only DELAYS rows — the discovered set, discovery ranks and
     # final saved rows are identical in every mode.
     order_mode: str = "crawl"
-
-    extra: dict = field(default_factory=dict)
 
     def wave_ts(self, wave: int) -> int:
         """Deterministic epoch-seconds timestamp for wave *w*."""

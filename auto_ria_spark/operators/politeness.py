@@ -160,13 +160,3 @@ def robots_gate(df: DataFrame, robots: DataFrame | None) -> DataFrame:
     allowed = F.coalesce(
         F.try_element_at(matched, F.lit(1))["a"], F.lit(True))
     return joined.filter(allowed).drop("__path", "__rhost", "__rules")
-
-
-def salt_counts(df: DataFrame) -> DataFrame:
-    """Per-host pending counts — the standalone skew-monitor view.  The
-    crawl engine does NOT call this per wave: it derives the hottest
-    host's pending bound from the per-host leg of the one stats job each
-    wave already runs (crawl.run_wave's fl_agg) and feeds it to
-    ``salt_n_for`` — a dedicated counting job here would double the
-    per-wave action count for the same number."""
-    return df.groupBy("host").agg(F.count("*").alias("pending"))

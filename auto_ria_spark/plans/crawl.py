@@ -49,9 +49,12 @@ row data never collects to the driver.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from auto_ria_spark.config import CrawlConfig
@@ -133,23 +136,24 @@ def log_adds(df: DataFrame, wave: int, cols: list[str]) -> DataFrame:
                          f"cast({wave} as int) as __fwave")
 
 
-_LOG_DEL_EXPRS: dict[tuple, list[str]] = {}
+@lru_cache(maxsize=16)
+def _log_del_exprs(schema: str, key: str) -> tuple[str, ...]:
+    """Tombstone projection strings for (schema, key): the key column and
+    a typed null for every other column.  Schema-constant, so memoized."""
+    exprs = []
+    for part in schema.split(","):
+        name, typ = part.strip().split(" ", 1)
+        exprs.append(f"{key} as {name}" if name == key
+                     else f"cast(null as {typ}) as {name}")
+    return tuple(exprs)
 
 
 def log_dels(keys: DataFrame, wave: int, schema: str, key: str) -> DataFrame:
     """Tombstone rows: the key column + nulls for the rest of the schema
     (parquet nulls — a tombstone costs bytes only for the key).  The
-    expression strings are schema-constant and cached; the whole
-    projection is ONE selectExpr (py4j round trips off the wave path)."""
-    exprs = _LOG_DEL_EXPRS.get((schema, key))
-    if exprs is None:
-        exprs = []
-        for part in schema.split(","):
-            name, typ = part.strip().split(" ", 1)
-            exprs.append(f"{key} as {name}" if name == key
-                         else f"cast(null as {typ}) as {name}")
-        _LOG_DEL_EXPRS[(schema, key)] = exprs
-    return keys.selectExpr(*exprs, "'d' as __op",
+    whole projection is ONE selectExpr (py4j round trips off the wave
+    path)."""
+    return keys.selectExpr(*_log_del_exprs(schema, key), "'d' as __op",
                            f"cast({wave} as int) as __fwave")
 
 
@@ -308,12 +312,6 @@ class CrawlEngine:
         # sharded filter commit — flushed to the metrics table at run()
         # end (write-amplification evidence)
         self._filter_log: list[tuple] = []
-        # intra-wave shared-stage caches (see _stage_share): current
-        # wave's frames + the previous wave's (still feeding that wave's
-        # in-flight async commits); rotated/released at the per-wave
-        # drain barrier
-        self._stage_caches: list[DataFrame] = []
-        self._stage_caches_prev: list[DataFrame] = []
         # delta-log accounting: persisted log row counts (for the
         # compaction decision) + per-(wave, table) write-volume records —
         # flushed to the metrics table at run() end like _filter_log
@@ -332,50 +330,20 @@ class CrawlEngine:
             f.result()
 
     def _stage_share(self, df: DataFrame) -> DataFrame:
-        """Intra-wave shared stage result: a lazy ``persist()``
-        registration (one O(1) py4j call — NO Catalyst work on the
-        driver's critical path) plus the async warm count, which pays
-        analysis/optimization/whole-stage-codegen and materializes the
-        cache in the background thread.
+        """Intra-wave shared stage result: a lazy
+        ``localCheckpoint(eager=False)`` stub plus the async warm count.
 
-        Replaces the former per-stage ``localCheckpoint(eager=False)``
-        stubs: a lazy checkpoint still calls ``queryExecution.toRdd``,
-        which runs the FULL optimizer + physical planning + Janino
-        codegen compile synchronously on the driver — measured at
-        0.3-1.0 s per stub (tracker phases: ~50 ms Catalyst, the rest
-        codegen compile, re-done every wave because the wave/ts literals
-        make each wave's generated source a cache miss).  Six stubs per
-        wave made that the single largest per-wave driver cost.
-
-        Intra-wave frames do not need lineage TRUNCATION (the wave-end
-        state checkpoints still cut lineage once per wave); they only
-        need to compute once across their multiple consumers, which the
-        SQL cache provides via analyzed-plan substitution.  Caches are
-        released after the wave's async commits land (the rotation at
-        the per-wave drain barrier), so storage stays O(2 waves)."""
-        if self.cfg.stage_share_mode == "persist":
-            df = df.persist()
-            self._stage_caches.append(df)
-            return self._warm(df)
+        The stub cuts lineage, so every downstream consumer analyzes a
+        shallow tree instead of the whole wave so far, and costs no
+        dedicated materialization job; the warm count (the wave's
+        single-worker warm thread) materializes it in the background,
+        overlapping the driver's plan construction of the next stage.
+        The stub still runs ``queryExecution.toRdd`` on the calling
+        thread (optimizer + physical planning + codegen compile).  A
+        ``persist()`` alternative that skips it was measured slower:
+        downstream trees deepen and cache-lookup scans grow
+        (OPTIMIZATION_r07.md §1)."""
         return self._warm(df.localCheckpoint(eager=False))
-
-    def _release_stage_caches(self, all_waves: bool = False) -> None:
-        """Unpersist stage caches whose consumers have all completed:
-        called right after a drain barrier, when the PREVIOUS wave's
-        async commits (the last readers of its stage frames) have
-        landed.  ``all_waves`` additionally releases the current wave's
-        frames (finalize path)."""
-        done, self._stage_caches_prev = (self._stage_caches_prev,
-                                         self._stage_caches)
-        self._stage_caches = []
-        if all_waves:
-            done = done + self._stage_caches_prev
-            self._stage_caches_prev = []
-        for df in done:
-            try:
-                df.unpersist(False)
-            except Exception:
-                pass
 
     # ---------------------------------------------------------------- filters
     # The URL-seen filter is pluggable (cfg.seen_filter): Bloom shards are
@@ -601,53 +569,15 @@ class CrawlEngine:
     def start(self, seeds: list[dict]) -> None:
         """Seed the frontier (mirrors the SCRAPER_START_URL bootstrap,
         reference: app/config/settings.py:76-79)."""
-        cfg = self.cfg
         seed_df = local_df(
             self.spark,
             [(s["url"], s.get("kind", "listing")) for s in seeds],
             "url string, kind string",
         )
-        fr = (
-            seed_df.select(
-                U.canonicalize_url(F.col("url")).alias("url_norm"),
-                F.col("kind"),
-            )
-            .withColumn("url_hash", U.url_hash64(F.col("url_norm")))
-            .withColumn("host", U.url_host(F.col("url_norm")))
-            .withColumn("kind_rank", U.kind_rank(F.col("kind")))
-            # pages-processed counter (reference page_count), NOT the URL's
-            # page= param — F7 counts pages fetched this run from 0
-            .withColumn("page_index", F.lit(0))
-            .withColumn("pos_on_page", F.lit(0))
-            .withColumn("attempt", F.lit(0))
-            .withColumn("not_before", F.lit(0).cast("long"))
-            .withColumn("discovery_rank", F.lit(None).cast("long"))
-            .withColumn("discovered_wave", F.lit(-1))
-            .withColumn("priority_price", F.lit(None).cast("int"))
-            .withColumn("priority_freshness", F.lit(None).cast("long"))
-            .select(*FRONTIER_COLS)
-        )
-        fr = robots_gate(fr, self.robots)
-        seen = fr.select("url_hash", "url_norm", "host", "kind",
-                         "discovery_rank", "discovered_wave")
-        tag = {"wave": -1}
-        self.t["frontier"].write(log_adds(fr, -1, FRONTIER_COLS),
-                                 mode="overwrite", tag=tag, num_files=1)
-        self.t["seen_urls"].write(seen, mode="overwrite", tag=tag, num_files=1)
-        filters = self._build_filters(seen, None, wave=-1)
-        # sharded seed write: one immutable file per shard, so later waves
-        # can commit touched shards only (merge_shards)
-        self.t["seen_filters"].write_sharded(filters, mode="overwrite",
-                                             tag=tag)
-        for name, schema in (("pending_cars", PENDING_LOG_SCHEMA),
-                             ("cars", CARS_SCHEMA),
-                             ("car_images", CAR_IMAGES_SCHEMA),
-                             ("metrics", METRICS_SCHEMA),
-                             ("host_state", HOSTSTATE_SCHEMA),
-                             ("saved_hashes", SAVED_HASHES_SCHEMA)):
-            self.t[name].write(empty_df(self.spark, schema),
-                               mode="overwrite", tag=tag, num_files=1)
-        self._log_rows = None  # fresh logs: re-size from footers
+        self._seed(
+            seed_df.select(U.canonicalize_url(F.col("url")).alias("url_norm"),
+                           "kind"),
+            kind=F.col("kind"), rank=F.lit(None).cast("long"), num_files=1)
 
     def start_from_df(self, seed_urls: DataFrame, kind: str = "car") -> None:
         """Bulk-seed the frontier from a DataFrame of URLs (sitemap-style
@@ -657,22 +587,38 @@ class CrawlEngine:
         ``seed_urls`` needs a ``url`` column; ranks are assigned per host in
         URL order (a bulk seed has no listing-derived crawl order).
         """
-        cfg = self.cfg
+        self._seed(
+            seed_urls.select(
+                U.canonicalize_url(F.col("url")).alias("url_norm")),
+            kind=F.lit(kind),
+            rank=F.row_number().over(
+                Window.partitionBy("host").orderBy("url_norm")).cast("long"),
+            num_files=max(2, self.cfg.shuffle_partitions // 2),
+            host_state=lambda fr: fr.groupBy("host").agg(
+                F.max("discovery_rank").alias("cars_discovered"),
+                F.lit(True).alias("pagination_done")))
+
+    def _seed(self, urls: DataFrame, kind: Column, rank: Column,
+              num_files: int,
+              host_state: Callable[[DataFrame], DataFrame] | None = None
+              ) -> None:
+        """Write the wave -1 snapshot of every table from ``urls`` (one
+        ``url_norm`` column): robots-gated frontier rows with ``kind`` and
+        ``discovery_rank`` from the given Columns, their seen set and
+        filter, ``host_state`` (a function of the gated frontier; None =
+        empty) and the other tables empty."""
         fr = (
-            seed_urls.select(U.canonicalize_url(F.col("url")).alias("url_norm"))
-            .withColumn("url_hash", U.url_hash64(F.col("url_norm")))
+            urls.withColumn("url_hash", U.url_hash64(F.col("url_norm")))
             .withColumn("host", U.url_host(F.col("url_norm")))
-            .withColumn("kind", F.lit(kind))
-            .withColumn("kind_rank", U.kind_rank(F.lit(kind)))
+            .withColumn("kind", kind)
+            .withColumn("kind_rank", U.kind_rank(F.col("kind")))
+            # pages-processed counter (reference page_count), NOT the URL's
+            # page= param — F7 counts pages fetched this run from 0
             .withColumn("page_index", F.lit(0))
             .withColumn("pos_on_page", F.lit(0))
             .withColumn("attempt", F.lit(0))
             .withColumn("not_before", F.lit(0).cast("long"))
-            .withColumn(
-                "discovery_rank",
-                F.row_number().over(
-                    Window.partitionBy("host").orderBy("url_norm"))
-                .cast("long"))
+            .withColumn("discovery_rank", rank)
             .withColumn("discovered_wave", F.lit(-1))
             .withColumn("priority_price", F.lit(None).cast("int"))
             .withColumn("priority_freshness", F.lit(None).cast("long"))
@@ -682,22 +628,26 @@ class CrawlEngine:
         seen = fr.select("url_hash", "url_norm", "host", "kind",
                          "discovery_rank", "discovered_wave")
         tag = {"wave": -1}
-        nf = max(2, cfg.shuffle_partitions // 2)
         self.t["frontier"].write(log_adds(fr, -1, FRONTIER_COLS),
-                                 mode="overwrite", tag=tag, num_files=nf)
-        self.t["seen_urls"].write(seen, mode="overwrite", tag=tag, num_files=nf)
+                                 mode="overwrite", tag=tag,
+                                 num_files=num_files)
+        self.t["seen_urls"].write(seen, mode="overwrite", tag=tag,
+                                  num_files=num_files)
         filters = self._build_filters(seen, None, wave=-1)
+        # sharded seed write: one immutable file per shard, so later waves
+        # can commit touched shards only (merge_shards)
         self.t["seen_filters"].write_sharded(filters, mode="overwrite",
                                              tag=tag)
-        hs = fr.groupBy("host").agg(
-            F.max("discovery_rank").alias("cars_discovered"),
-            F.lit(True).alias("pagination_done"))
-        self.t["host_state"].write(hs, mode="overwrite", tag=tag, num_files=2)
-        for name, schema in (("pending_cars", PENDING_LOG_SCHEMA),
-                             ("cars", CARS_SCHEMA),
-                             ("car_images", CAR_IMAGES_SCHEMA),
-                             ("metrics", METRICS_SCHEMA),
-                             ("saved_hashes", SAVED_HASHES_SCHEMA)):
+        empty = [("pending_cars", PENDING_LOG_SCHEMA), ("cars", CARS_SCHEMA),
+                 ("car_images", CAR_IMAGES_SCHEMA),
+                 ("metrics", METRICS_SCHEMA),
+                 ("saved_hashes", SAVED_HASHES_SCHEMA)]
+        if host_state is None:
+            empty.append(("host_state", HOSTSTATE_SCHEMA))
+        else:
+            self.t["host_state"].write(host_state(fr), mode="overwrite",
+                                       tag=tag, num_files=2)
+        for name, schema in empty:
             self.t[name].write(empty_df(self.spark, schema),
                                mode="overwrite", tag=tag, num_files=1)
         self._log_rows = None  # fresh logs: re-size from footers
@@ -706,24 +656,33 @@ class CrawlEngine:
     def run_wave(self, wave: int, state: dict | None = None,
                  defer_commits: bool = False) -> WaveStats:
         """One BFS wave.  Job discipline (the 0.8-scaling-efficiency lever):
-        stage results are LAZILY checkpointed (``localCheckpoint(eager=
-        False)`` — truncates lineage so each downstream action re-analyzes
-        a stub, not the whole wave tree, but costs NO dedicated
-        materialization job), ONE combined aggregation action materializes
-        every stage and yields all wave counters, then the table commits —
-        metrics included — fan out over driver threads against warm
-        caches.  Per wave: 1 stats job + the table writes, down from ~16
-        sequential jobs.  (On a real cluster the per-stage materialization
-        primitive is the Iceberg table commit itself; the local checkpoint
-        is the sandbox stand-in and is re-derivable from the committed
-        snapshots on executor loss.)
+        every stage result shared by several consumers goes through
+        :meth:`_stage_share` — a lazy ``localCheckpoint(eager=False)``
+        stub that truncates lineage (each downstream action analyzes a
+        stub, not the whole wave tree) but costs NO dedicated
+        materialization job — and ONE combined aggregation action
+        materializes every stage and yields all wave counters; then the
+        table commits, metrics included, fan out over driver threads
+        against warm stubs.  Per wave: 1 stats job + the table writes,
+        down from ~16 sequential jobs.  (On a real cluster the per-stage
+        materialization primitive is the Iceberg table commit itself; the
+        local checkpoint is the sandbox stand-in and is re-derivable from
+        the committed snapshots on executor loss.)
 
-        Each checkpointed stage is also *warmed asynchronously*: a
+        Each shared stage is also *warmed asynchronously*: a
         single-worker thread counts it as soon as it is defined, so JVM
         analysis/execution of stage N overlaps the driver's py4j plan
         construction of stage N+1 (driver planning is the measured
         fixed cost per wave — without overlap the executors sit idle
-        through it).
+        through it).  The warm thread and the next-state fan-out threads
+        are released when the wave returns or raises.  The wave never
+        changes session conf, so a standalone wave plans exactly like
+        one driven by :meth:`run`.
+
+        ``state`` is the previous wave's pass-through state (None = read
+        the tables); ``defer_commits`` leaves this wave's table commits in
+        flight (drained by the next wave or :meth:`finalize`) and builds
+        the pass-through state for the next wave in ``_next_state``.
 
         Contract for standalone callers (tests / custom drivers): the
         per-wave filter and frontier/pending write-volume accounting
@@ -733,12 +692,6 @@ class CrawlEngine:
         yourself ⟹ call ``finalize()`` when done, or the O(delta)
         write-volume evidence for those waves is never durably recorded
         (and the in-memory logs grow unboundedly)."""
-        import time as _time
-        from concurrent.futures import ThreadPoolExecutor
-        cfg, spark = self.cfg, self.spark
-        ts = cfg.wave_ts(wave)
-        st = WaveStats(wave=wave)
-        _t = {"start": _time.time()}
         warm_ex = ThreadPoolExecutor(max_workers=1)
 
         def _warm(df):
@@ -751,6 +704,19 @@ class CrawlEngine:
             return df
 
         self._warm = _warm
+        try:
+            return self._wave(wave, state, defer_commits)
+        finally:
+            warm_ex.shutdown(wait=False)
+
+    def _wave(self, wave: int, state: dict | None,
+              defer_commits: bool) -> WaveStats:
+        """:meth:`run_wave`'s body, run with the wave's warm thread up."""
+        import time as _time
+        cfg, spark = self.cfg, self.spark
+        ts = cfg.wave_ts(wave)
+        st = WaveStats(wave=wave)
+        _t = {"start": _time.time()}
 
         def _mark(name):
             now = _time.time()
@@ -788,7 +754,7 @@ class CrawlEngine:
                     timeout_s=cfg.http_timeout_s, workers=cfg.http_workers,
                     cand_cols=FRONTIER_COLS, cand_schema=E["fetch_schema"])
             else:
-                f = fetched_frontier(sel, None, page_side=E["page_side"],
+                f = fetched_frontier(sel, page_side=E["page_side"],
                                      cand_cols=FRONTIER_COLS,
                                      cand_schema=E["fetch_schema"])
             if cfg.payload_format == "html":
@@ -904,39 +870,32 @@ class CrawlEngine:
         fetched_hashes = fetched.select("url_hash")
 
         def b_frontier():
-            return self._warm(
+            return self._stage_share(
                 pool.join(fetched_hashes, "url_hash", "left_anti")
-                .unionByName(requeue)
-                .localCheckpoint(eager=False))
+                .unionByName(requeue))
 
         def b_seen():
             # seen_add feeds its table write, the filter build AND the
             # pass-through union — checkpoint so it computes once
-            sa = self._warm(
+            sa = self._stage_share(
                 new_links.unionByName(next_pages).unionByName(phone_rows)
                 .select(*E["seen_add_select"])
-                .unionByName(seen_only)
-                .localCheckpoint(eager=False))
-            fx = self._warm(
-                self._build_filters(sa, filters, wave)
-                .localCheckpoint(eager=False))
-            snu = (self._warm(
-                seen.unionByName(sa).localCheckpoint(eager=False))
-                if defer_commits else None)
+                .unionByName(seen_only))
+            fx = self._stage_share(self._build_filters(sa, filters, wave))
+            snu = (self._stage_share(seen.unionByName(sa))
+                   if defer_commits else None)
             return sa, fx, snu
 
         def b_pending():
-            return self._warm(
+            return self._stage_share(
                 pending_all.join(resolved_hashes, "phone_hash", "left_anti")
-                .join(dead_phones, "phone_hash", "left_anti")
-                .localCheckpoint(eager=False))
+                .join(dead_phones, "phone_hash", "left_anti"))
 
         def b_host_saved():
-            hs = self._warm(host_state_next.localCheckpoint(eager=False))
+            hs = self._stage_share(host_state_next)
             shr = saved_rows.select(E["saved_hash_col"])
-            shu = (self._warm(
-                saved_hashes.unionByName(shr).localCheckpoint(eager=False))
-                if defer_commits else None)
+            shu = (self._stage_share(saved_hashes.unionByName(shr))
+                   if defer_commits else None)
             return hs, shr, shu
 
         def b_imgs():
@@ -944,30 +903,34 @@ class CrawlEngine:
             return self._verify_images(saved_rows, wave)
 
         pex = ThreadPoolExecutor(max_workers=5)
-        futs = [pex.submit(b) for b in
-                (b_frontier, b_seen, b_pending, b_host_saved, b_imgs)]
-        # branch-independent stats/metrics plans build HERE, overlapping
-        # the branches' py4j/JVM work (their GIL-released socket waits)
-        wave_lit = F.lit(wave).alias("wave")
-        f_agg = fetched.groupBy().agg(*E["f_agg"])
-        c_agg = flagged.groupBy().agg(*E["c_agg"])
-        p_agg = parsed.groupBy().agg(*E["p_agg"])
-        per_part = fetched.groupBy("__pid", "kind").agg(*E["per_part_agg"])
-        metric_rows = per_part.select(
-            wave_lit, F.col("__pid").alias("partition_id"),
-            "kind", F.lit("fetched").alias("metric"),
-            F.col("fetched").cast("long").alias("value"),
-        ).unionByName(per_part.select(
-            wave_lit, F.col("__pid").alias("partition_id"),
-            "kind", F.lit("fetch_ok").alias("metric"),
-            F.col("ok").cast("long").alias("value")))
-        s_agg = saved_rows.groupBy().agg(*E["s_agg"])
-        frontier_next = futs[0].result()
-        seen_add, filters_next, seen_next_u = futs[1].result()
-        pending_next = futs[2].result()
-        host_state_next, saved_hash_rows, savedh_next_u = futs[3].result()
-        imgs_next = futs[4].result()
-        pex.shutdown(wait=False)
+        try:
+            futs = [pex.submit(b) for b in
+                    (b_frontier, b_seen, b_pending, b_host_saved, b_imgs)]
+            # branch-independent stats/metrics plans build HERE, overlapping
+            # the branches' py4j/JVM work (their GIL-released socket waits)
+            wave_lit = F.lit(wave).alias("wave")
+            f_agg = fetched.groupBy().agg(*E["f_agg"])
+            c_agg = flagged.groupBy().agg(*E["c_agg"])
+            p_agg = parsed.groupBy().agg(*E["p_agg"])
+            per_part = fetched.groupBy("__pid", "kind").agg(
+                *E["per_part_agg"])
+            metric_rows = per_part.select(
+                wave_lit, F.col("__pid").alias("partition_id"),
+                "kind", F.lit("fetched").alias("metric"),
+                F.col("fetched").cast("long").alias("value"),
+            ).unionByName(per_part.select(
+                wave_lit, F.col("__pid").alias("partition_id"),
+                "kind", F.lit("fetch_ok").alias("metric"),
+                F.col("ok").cast("long").alias("value")))
+            s_agg = saved_rows.groupBy().agg(*E["s_agg"])
+            frontier_next = futs[0].result()
+            seen_add, filters_next, seen_next_u = futs[1].result()
+            pending_next = futs[2].result()
+            host_state_next, saved_hash_rows, savedh_next_u = \
+                futs[3].result()
+            imgs_next = futs[4].result()
+        finally:
+            pex.shutdown(wait=False)
         # O(delta) frontier/pending persistence: the pass-through state
         # keeps the full RESOLVED frames, but the durable commit appends
         # only this wave's additions + tombstones (see the delta-log notes
@@ -1136,9 +1099,6 @@ class CrawlEngine:
         # only compacts a little early.  bound == 0 ⟺ empty delta (drain
         # wave) ⟹ tag-only commit.
         self._drain_writes()
-        # the drained (previous) wave's async commits were the last
-        # consumers of its shared-stage caches — release them now
-        self._release_stage_caches()
         for name, table, delta, full, bound, live, cols in (
                 ("frontier", "frontier", frontier_delta, frontier_next,
                  (row["sa_n"] or 0) + st.requeued + st.selected,
@@ -1233,7 +1193,6 @@ class CrawlEngine:
             # standalone callers read the tables right after the wave
             self._drain_writes()
         _mark("w_tables")
-        warm_ex.shutdown(wait=False)
         _t.pop("_last", None); _t.pop("start", None)
         st.detail = _t
         return st
@@ -1682,10 +1641,6 @@ class CrawlEngine:
         wave = first
         state = None
         pipeline = self.cfg.pipeline_waves
-        conf = self.spark.conf
-        aqe_before = conf.get("spark.sql.adaptive.enabled", "true")
-        if not self.cfg.aqe_in_wave:
-            conf.set("spark.sql.adaptive.enabled", "false")
         try:
             while wave < first + max_waves:
                 st = self.run_wave(wave, state=state,
@@ -1698,10 +1653,7 @@ class CrawlEngine:
                     break
                 wave += 1
         finally:
-            try:
-                self.finalize()
-            finally:
-                conf.set("spark.sql.adaptive.enabled", aqe_before)
+            self.finalize()
         return stats
 
     def finalize(self) -> None:
@@ -1714,7 +1666,6 @@ class CrawlEngine:
         frontier/pending write-volume evidence to the metrics table.
         Idempotent: a second call with nothing accumulated is a no-op."""
         self._drain_writes()
-        self._release_stage_caches(all_waves=True)
         if self._write_ex is not None:
             self._write_ex.shutdown(wait=True)
             self._write_ex = None

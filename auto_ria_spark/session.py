@@ -16,7 +16,6 @@ def get_spark(
     app_name: str = "auto-ria-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_max_records: int = 2048,
     extra: dict | None = None,
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -30,9 +29,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records)
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

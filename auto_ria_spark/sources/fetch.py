@@ -51,32 +51,21 @@ def page_store_side(pages: DataFrame) -> DataFrame:
     )
 
 
-def fetched_frontier(selected: DataFrame, pages: DataFrame | None, *,
-                     page_side: DataFrame | None = None,
-                     cand_cols: list[str] | None = None,
-                     cand_schema: str | None = None) -> DataFrame:
+def fetched_frontier(selected: DataFrame, *, page_side: DataFrame,
+                     cand_cols: list[str], cand_schema: str) -> DataFrame:
     """Join the wave's selected frontier rows to the page store and run the
     fetch stage.  Both sides are keyed by url_hash (long) — at scale both
     tables are bucketed by url_hash so this is a co-partitioned join.
 
-    ``cand_cols``/``cand_schema`` let the caller pass the (known, fixed)
-    frontier shape so this function never touches ``selected.schema`` —
-    a schema access forces a full Catalyst analysis of the selection
-    chain, a measurable per-wave driver cost.
+    ``page_side`` is the :func:`page_store_side` projection, built once per
+    crawl.  ``cand_cols``/``cand_schema`` are the (known, fixed) frontier
+    shape, so this function never touches ``selected.schema`` — a schema
+    access forces a full Catalyst analysis of the selection chain, a
+    measurable per-wave driver cost.
     """
-    if page_side is None:
-        page_side = page_store_side(pages)
     joined = selected.join(
         page_side, F.col("url_hash") == F.col("__page_hash"), "left"
     ).drop("__page_hash")
-
-    if cand_cols is None:
-        cand_cols = [c for c in selected.columns]
-    cols = cand_cols
-    if cand_schema is None:
-        cand_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in selected.schema.fields)
     out_schema = cand_schema + ", " + FETCH_RESULT_EXTRA
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -84,7 +73,7 @@ def fetched_frontier(selected: DataFrame, pages: DataFrame | None, *,
         for pdf in batches:
             if not len(pdf):
                 continue
-            out = pdf[cols].copy()
+            out = pdf[cand_cols].copy()
             ua_idx = (pdf["url_hash"].to_numpy("int64") % len(UA_LIST)) % len(UA_LIST)
             out["fetch_ua"] = [UA_LIST[i] for i in ua_idx]
             missing = pdf["__payload"].isna()
